@@ -1,5 +1,7 @@
 package graft.ingest
 
+import java.io.FileNotFoundException
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -22,15 +24,31 @@ object Ndjson {
 
   val CorruptCol = "_corrupt_record"
 
-  /** Schema'd NDJSON scan with corrupt-record channel and file lineage
-    * (`input_file_name`), plus the reference's type-from-filename
-    * projection (M1, `__init__.py:218`: `blob_name.split('-')[0]`).
+  /** Schema'd NDJSON scan of one resource type's files in a Bulk Data
+    * landing directory (`<Type>-*.json`, the export's naming), with
+    * corrupt-record channel and file lineage (`input_file_name`), plus
+    * the reference's type-from-filename projection (M1,
+    * `__init__.py:218`: `blob_name.split('-')[0]`).
+    *
+    * The directory is read with a `pathGlobFilter` rather than as a
+    * glob path: a glob path sends Spark looking for a streaming-sink
+    * metadata directory at the pattern itself, which logs a WARN and a
+    * stack trace per read. A filter that matches nothing would read as
+    * empty, so a type with no landed files fails here, as a glob path
+    * does.
     */
-  def read(spark: SparkSession, path: String, schema: StructType): DataFrame = {
+  def read(spark: SparkSession, landing: String, resourceType: String,
+           schema: StructType): DataFrame = {
+    val pattern = s"$resourceType-*.json"
+    val glob = new Path(landing, pattern)
+    val fs = glob.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (Option(fs.globStatus(glob)).forall(_.isEmpty))
+      throw new FileNotFoundException(
+        s"no $resourceType files ($pattern) in landing directory $landing")
     val withCorrupt =
       if (schema.fieldNames.contains(CorruptCol)) schema
       else schema.add(StructField(CorruptCol, StringType))
-    spark.read.text(path)
+    spark.read.option("pathGlobFilter", pattern).text(landing)
       .filter(length(trim(col("value"))) > 0)
       .select(
         from_json(

@@ -1,8 +1,8 @@
 package graft.pipeline
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /** The reference's orchestration shape (O1–O3, SURVEY §2.4) as local
@@ -70,7 +70,7 @@ object BulkPipeline {
     val spark = df.sparkSession
     val tmp = stagingPath(new Path(target)).toString
     df.write.mode("overwrite").parquet(tmp)
-    swapIn(spark, tmp, target)
+    promoteDir(spark, tmp, target)
   }
 
   /** Staging/aside siblings are DOT-prefixed so Spark's file listing
@@ -86,14 +86,16 @@ object BulkPipeline {
   private[pipeline] def asidePath(dst: Path): Path =
     new Path(dst.getParent, "." + dst.getName + ".__old__")
 
-  /** Crash-safe directory swap: the previous target is renamed ASIDE
-    * (not deleted) before the staging dir renames into place, and only
-    * then removed. A crash between the two renames leaves the old data
-    * recoverable at `<target>.__old__` instead of gone — the
-    * delete-then-rename version had a window where a failure lost the
-    * last promoted copy AND left readers with nothing.
+  /** Directory-level stage promotion by FS rename (replaces the
+    * reference's per-blob copy+delete, `__init__.py:338-349`), as a
+    * crash-safe swap: the previous target is renamed ASIDE (not
+    * deleted) before `src` renames into place, and only then removed.
+    * A crash between the two renames leaves the old data recoverable
+    * at `<target>.__old__` instead of gone — the delete-then-rename
+    * version had a window where a failure lost the last promoted copy
+    * AND left readers with nothing.
     */
-  private def swapIn(spark: SparkSession, src: String, target: String): Unit = {
+  def promoteDir(spark: SparkSession, src: String, target: String): Unit = {
     val fs = new Path(target).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dst = new Path(target)
     val old = asidePath(dst)
@@ -140,7 +142,7 @@ object BulkPipeline {
       resources: Seq[(String, StructType)],
       rxnorm: DataFrame): (String, Map[String, Long]) = {
     val corrupt = resources.map { case (name, schema) =>
-      val raw = graft.ingest.Ndjson.read(spark, s"${stages.landing}/$name-*.json", schema)
+      val raw = graft.ingest.Ndjson.read(spark, stages.landing, name, schema)
       val nBad = graft.ingest.Ndjson.corrupt(raw).count()
       val transformed = graft.transform.FhirTransforms
         .dispatch(serverUrl, name, rxnorm)(graft.ingest.Ndjson.good(raw))
@@ -149,28 +151,23 @@ object BulkPipeline {
       name -> nBad
     }.toMap
 
-    // Manifest: one input entry per promoted part-file, grouped by type
-    // (the reference's blob listing + Parameters build, `:199-242`).
+    // Manifest: one input entry per promoted part-file, ordered by
+    // (type, url) (the reference's blob listing + Parameters build,
+    // `:199-242`). The entries are already on the driver, so no job.
     val fs = new Path(stages.promoted).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val entries = resources.flatMap { case (name, _) =>
       fs.listStatus(new Path(s"${stages.promoted}/$name"))
         .filter(s => s.getPath.getName.startsWith("part-"))
         .map(s => (name, s.getPath.toString))
     }
-    import spark.implicits._
-    val manifest = entries.toDF("type", "url")
-      .groupBy(lit("application/fhir+ndjson").as("inputFormat"))
-      .agg(sort_array(collect_list(struct(col("type"), col("url")))).as("input"))
-      .select(to_json(struct(col("inputFormat"), col("input"))).as("m"))
-      .as[String].head()
-    (manifest, corrupt)
+    val json = new ObjectMapper()
+    val manifest = json.createObjectNode().put("inputFormat", "application/fhir+ndjson")
+    val input = manifest.putArray("input")
+    entries.sorted.foreach { case (tpe, url) =>
+      input.addObject().put("type", tpe).put("url", url)
+    }
+    (json.writeValueAsString(manifest), corrupt)
   }
-
-  /** Directory-level stage promotion by FS rename (replaces the
-    * reference's per-blob copy+delete, `__init__.py:338-349`); same
-    * crash-safe aside-rename swap as [[writeAndPromote]]. */
-  def promoteDir(spark: SparkSession, src: String, dst: String): Unit =
-    swapIn(spark, src, dst)
 
   /** `_since` cursor persistence (ref `__init__.py:609-613`): the next
     * incremental extract reads only rows with ts > cursor. Stored as a

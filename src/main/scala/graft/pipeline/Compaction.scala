@@ -83,7 +83,7 @@ object Compaction {
     if (hasData) root +: below else below
   }
 
-  /** Crash-recovery sweep: a crash between swapIn's two renames leaves
+  /** Crash-recovery sweep: a crash between promoteDir's two renames leaves
     * a leaf stranded in its `.X.__old__` aside (or a pre-r12
     * `X.__old__`) with no live `X` — and since leafDirs skips asides
     * and promoteDir only runs on leaves that need compacting, the

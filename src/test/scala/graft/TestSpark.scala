@@ -25,6 +25,11 @@ object TestSpark {
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // Single-partition windows are pinned by PlanContractSpec's audited
+    // allowlist; the per-execution warning would only repeat it.
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
     s
   }
 }

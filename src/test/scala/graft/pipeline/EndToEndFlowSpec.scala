@@ -49,11 +49,26 @@ class EndToEndFlowSpec extends AnyFunSuite {
     assert(conditions.select("recordedDate").distinct().as[String].collect() ===
       Array("2019-09-04T11:10:27.000Z"))
 
-    // processed dir was renamed away; manifest lists both types
+    // processed dir was renamed away; the manifest lists every promoted
+    // part-file, ordered by (type, url), byte for byte
     assert(!new java.io.File(s"${stages.processed}/Patient").exists())
-    assert(manifest.contains(""""inputFormat":"application/fhir+ndjson""""))
-    assert(manifest.contains(""""type":"Patient""""))
-    assert(manifest.contains(""""type":"Condition""""))
+    val entries = for {
+      tpe <- Seq("Condition", "Patient")
+      f <- new java.io.File(s"${stages.promoted}/$tpe").listFiles()
+        .filter(_.getName.startsWith("part-")).map(_.getAbsolutePath).sorted
+    } yield s"""{"type":"$tpe","url":"file:$f"}"""
+    assert(entries.size >= 2)
+    assert(manifest ===
+      s"""{"inputFormat":"application/fhir+ndjson","input":[${entries.mkString(",")}]}""")
+  }
+
+  test("a flow over no resource types writes an empty manifest") {
+    val stages = BulkPipeline.Stages(Files.createTempDirectory("emptyflow").toString)
+    val rxDim = Seq(("0", "", "")).toDF("ndc", "name", "rxnorm")
+    val (manifest, corrupt) = BulkPipeline.runLocalFlow(
+      spark, stages, "https://epic.example/fhir", Seq(), rxDim)
+    assert(corrupt.isEmpty)
+    assert(manifest === """{"inputFormat":"application/fhir+ndjson","input":[]}""")
   }
 
   test("authorized export: discovery -> JWT -> token -> kickoff -> poll -> land -> flow") {

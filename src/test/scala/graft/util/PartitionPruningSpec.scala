@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** Partition pruning — the other half of the 100 TB scan story next
-  * to predicate pushdown (PlanAudit) and bucketing (ScaleSpec): a
+  * to predicate pushdown (PlanContractSpec) and bucketing (ScaleSpec): a
   * date-partitioned layout must turn an equality filter on the
   * partition column into a PLAN-TIME partition filter, so a day query
   * over years of data opens one directory, not the table.
